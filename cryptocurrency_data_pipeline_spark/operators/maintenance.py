@@ -41,14 +41,7 @@ def compact_parquet(
 
     ``sort_col`` additionally range-clusters during the rewrite (see
     ``gold.write_sorted``) so compaction doubles as layout optimization.
-    The rewrite lands in a sibling temp dir and swaps in via
-    ``renameat2(RENAME_EXCHANGE)`` — a single atomic syscall on Linux, so
-    readers see either the old or the new table, never neither. Where the
-    exchange isn't available the fallback is rename-aside → rename-in →
-    delete-aside: the old data survives until the new path is live (a
-    reader can hit ENOENT in the instant between the two renames, but a
-    crash never loses the table, unlike delete-then-rename). On object
-    stores a transactional table format would do this under a log instead.
+    The rewrite lands in a sibling temp dir published by :func:`swap_in`.
     """
     n_files = max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
     df: DataFrame = spark.read.parquet(path)
@@ -67,14 +60,28 @@ def compact_parquet(
     stats = _stats_manifest_path(path)
     if os.path.exists(stats):
         shutil.copy2(stats, _stats_manifest_path(tmp))
-    if _exchange_dirs(path, tmp):
-        shutil.rmtree(tmp)  # tmp now holds the pre-compaction files
+    swap_in(path, tmp)
+    return n_files
+
+
+def swap_in(path: str, tmp: str) -> None:
+    """Publish the written sibling dir ``tmp`` at ``path``, deleting the
+    table it replaces (a first load is a plain rename).
+    ``renameat2(RENAME_EXCHANGE)`` is one atomic syscall on Linux: readers
+    see the old or the new table, never neither. Without it, rename-aside
+    → rename-in → delete-aside keeps the old data until the new path is
+    live (a reader can hit ENOENT between the renames, but a crash never
+    loses the table, unlike delete-then-rename). On object stores a
+    transactional table format would do this under a log instead."""
+    if not os.path.exists(path):
+        os.rename(tmp, path)
+    elif _exchange_dirs(path, tmp):
+        shutil.rmtree(tmp)  # tmp now holds the replaced table
     else:
         aside = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
         os.rename(path, aside)
         os.rename(tmp, path)
         shutil.rmtree(aside)
-    return n_files
 
 
 def _exchange_dirs(a: str, b: str) -> bool:

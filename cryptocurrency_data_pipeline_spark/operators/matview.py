@@ -307,11 +307,10 @@ def compact_partials(
     for the compaction's duration (rare, operator-initiated).  On
     success the compaction watermark advances to the highest folded
     epoch, which is what keeps replays of folded epochs no-ops."""
-    import shutil
     import uuid
 
     from cryptocurrency_data_pipeline_spark.operators.maintenance import (
-        _exchange_dirs,
+        swap_in,
         write_json_durable,
     )
 
@@ -328,17 +327,7 @@ def compact_partials(
         tmp = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
         folded.write.partitionBy("epoch").parquet(tmp)
         n = spark.read.parquet(tmp).count()
-        # Same swap discipline as maintenance.compact_parquet: atomic
-        # renameat2 exchange where the platform has it, rename-aside
-        # fallback elsewhere (old data survives a crash; a reader can hit
-        # ENOENT only in the fallback's rename window).
-        if _exchange_dirs(path, tmp):
-            shutil.rmtree(tmp)  # tmp now holds the pre-compaction epochs
-        else:
-            aside = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(path, aside)
-            os.rename(tmp, path)
-            shutil.rmtree(aside)
+        swap_in(path, tmp)
         if max_epoch is not None:
             write_json_durable(_watermark_path(path), {"epoch": int(max_epoch)})
     return n

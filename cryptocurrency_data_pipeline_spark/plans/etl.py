@@ -11,20 +11,38 @@ at 100 TB the layers ARE the recovery points.
 Anti-patterns eliminated (SURVEY §4): zero ``collect()`` validation, one
 action per sink instead of 11+ guard ``count()``s, dynamic partition
 overwrite instead of read-union-rewrite merges.
+
+A cycle over a day's small batch is bound by fixed per-job cost, not data
+volume, so the stages also avoid Spark jobs that do no work:
+
+* Every table the stages read back (silver, ``dim_coins``, ``dim_date``)
+  is read with its declared schema (``schemas.SILVER``, ``DIM_COINS``,
+  ``DIM_DATE``) — a bare ``spark.read.parquet`` launches a footer-reading
+  job just to infer it.
+* The metrics-sink rows are built as Arrow-backed local frames
+  (``quality.local_frame``), not ``createDataFrame(list)``, whose pickled
+  RDD forks a Python worker on every append.
+* The dims are published by one write into a unique sibling directory and
+  a directory swap (``maintenance.swap_in``).
+* The quality gate's empty-table test is the ``max(update_date)`` probe it
+  runs anyway, not a separate ``isEmpty`` job.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cryptocurrency_data_pipeline_spark.operators import gold, quality, silver
+from cryptocurrency_data_pipeline_spark.operators.maintenance import swap_in
 from cryptocurrency_data_pipeline_spark.plans.runner import SKIP, Pipeline
-from cryptocurrency_data_pipeline_spark.schemas import REQUIRED_FIELDS
+from cryptocurrency_data_pipeline_spark.schemas import DIM_COINS, DIM_DATE, REQUIRED_FIELDS, SILVER
 from cryptocurrency_data_pipeline_spark.sources import ingestion
 
 
@@ -159,13 +177,14 @@ def quality_stage(spark: SparkSession, paths: EtlPaths, constraints=None):
     only (partition-pruned scan) — matching the reference, which gates
     each day's batch: profiling the whole multi-date table would fail
     the Uniqueness(coin_id) constraint from day 2 onward, since every
-    coin legitimately appears once per retained date."""
+    coin legitimately appears once per retained date.  A NULL latest
+    date means an empty table, so that one probe is also the SKIP test."""
 
     def stage(silver_path):
-        df = spark.read.parquet(silver_path or paths.silver)
-        if df.isEmpty():
-            return SKIP
+        df = spark.read.schema(SILVER).parquet(silver_path or paths.silver)
         latest = df.agg(F.max("update_date")).collect()[0][0]
+        if latest is None:
+            return SKIP
         day = df.where(F.col("update_date") == F.lit(latest))
         metrics = quality.profile(
             day,
@@ -185,7 +204,7 @@ def quality_stage(spark: SparkSession, paths: EtlPaths, constraints=None):
     return stage
 
 
-def _read_parquet_if_exists(spark: SparkSession, path: str):
+def _read_parquet_if_exists(spark: SparkSession, path: str, schema: StructType):
     """The table, or None ONLY when it does not exist yet.  Any other
     read failure (corruption, permission, transient IO) must propagate:
     treating it as first-load would hand merge_dim an empty 'existing'
@@ -193,40 +212,42 @@ def _read_parquet_if_exists(spark: SparkSession, path: str):
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e):
             return None
         raise
 
 
+def _publish_dim(spark, path: str, schema: StructType, new, keys) -> None:
+    """Merge ``new`` into the (tiny) dim at ``path``, rewritten wholesale.
+    The merge reads the dim it replaces, so it lands in a unique sibling
+    dir that ``swap_in`` publishes; no tmp copy is left behind."""
+    existing = _read_parquet_if_exists(spark, path, schema)
+    tmp = f"{path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
+    gold.merge_dim(existing, new, keys).coalesce(1).write.parquet(tmp)
+    swap_in(path, tmp)
+
+
 def gold_stage(spark: SparkSession, paths: EtlPaths):
-    """Gold: fact (dynamic-partition merge), dims (key-deduped merges)."""
+    """Gold: fact (dynamic-partition merge), dims (key-deduped merges,
+    each published by a directory swap — see ``_publish_dim``).  Silver
+    and the existing dims are read with their declared schemas, so no
+    read launches a schema-inference job."""
 
     def stage(silver_path):
-        df = spark.read.parquet(silver_path or paths.silver)
+        df = spark.read.schema(SILVER).parquet(silver_path or paths.silver)
         if df.isEmpty():
             return SKIP
-        fact = gold.build_fact(df)
-        gold.merge_fact(fact, paths.gold_fact)
-
-        new_coins = gold.build_dim(df, ["coin_id", "symbol", "name"])
-        existing = _read_parquet_if_exists(spark, paths.gold_dim_coins)
-        merged = gold.merge_dim(existing, new_coins, ["coin_id"])
-        # Dim is tiny (one row per coin): rewrite wholesale.
-        merged.coalesce(1).write.mode("overwrite").parquet(paths.gold_dim_coins + "_tmp")
-        spark.read.parquet(paths.gold_dim_coins + "_tmp").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(paths.gold_dim_coins)
-
-        dim_date = gold.build_dim_date(df, "update_date")
-        existing_d = _read_parquet_if_exists(spark, paths.gold_dim_date)
-        gold.merge_dim(existing_d, dim_date, ["date"]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(paths.gold_dim_date + "_tmp")
-        spark.read.parquet(paths.gold_dim_date + "_tmp").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(paths.gold_dim_date)
+        gold.merge_fact(gold.build_fact(df), paths.gold_fact)
+        _publish_dim(
+            spark, paths.gold_dim_coins, DIM_COINS,
+            gold.build_dim(df, DIM_COINS.names), ["coin_id"],
+        )
+        _publish_dim(
+            spark, paths.gold_dim_date, DIM_DATE,
+            gold.build_dim_date(df, "update_date"), ["date"],
+        )
         return paths.gold_fact
 
     return stage
@@ -261,8 +282,6 @@ def replay_dlq(
     way, and keep-latest dedup absorbs the duplicate payload copies.
     """
     from pyspark.errors.exceptions.captured import AnalysisException
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from cryptocurrency_data_pipeline_spark.schemas import CRYPTO_MARKETS
 
     try:
@@ -313,7 +332,7 @@ def replay_dlq(
 
     # Rewrite the DLQ with only the still-failing envelopes.  The source
     # and destination are the same directory, so materialize through a
-    # tmp swap (the gold_stage idiom) — a direct overwrite would truncate
+    # sibling tmp dir — a direct overwrite would truncate
     # the files its own tasks still need to read.  An empty JSON dir is
     # unreadable (no schema), so the drained case writes a typed empty
     # frame instead of round-tripping through tmp.

@@ -5,14 +5,20 @@ Reproduces the reference's declared schemas as explicit ``StructType``s:
 * ``CRYPTO_MARKETS``  — EXPECTED_SCHEMA at glue/data_transform_s3.py:26-40
   (13 fields; ``id`` renamed to ``coin_id`` at the Silver boundary).
 * ``SILVER``          — post-transform shape, glue/data_transform_s3.py:113-129
-  (adds ``update_date`` DateType partition key + ``last_updated_ts``).
+  (adds ``last_updated_ts`` + the ``update_date`` DateType partition key).
+* ``DIM_COINS`` / ``DIM_DATE`` — the gold dims, glue/data_aggregate_gold.py.
 * ``STREAM_TICK``     — producer payload, streaming/producer.py:19-28.
 * ``DLQ_RECORD``      — rejected-row envelope, glue/data_transform_s3.py:89-94
   and streaming/consumer.py:60-65.
 * ``DQ_METRIC``       — metric row, glue/data_quality_pydeequ.py:61-64.
+* ``DQ_CHECK``        — constraint result row, glue/data_quality_pydeequ.py:91.
 
 Explicit schemas are load-bearing at scale: they keep ``spark.read.json``
-from schema-inference scans and let parquet readers prune columns.
+from schema-inference scans and let parquet readers prune columns.  The
+tables the ETL stages read back (silver and the dims) are declared exactly
+as parquet reads them back — every field nullable, partition columns last —
+so ``spark.read.schema(...)`` skips the footer-reading inference job; a test
+pins each against the schema Spark infers from the landed files.
 """
 
 from __future__ import annotations
@@ -53,13 +59,14 @@ CRYPTO_MARKETS = StructType(
 #: schema-enforcement split (glue/data_transform_s3.py:72-101).
 REQUIRED_FIELDS = [f.name for f in CRYPTO_MARKETS.fields if not f.nullable]
 
-# Silver shape (glue/data_transform_s3.py:113-129).
+# Silver shape (glue/data_transform_s3.py:113-129): the batch record with
+# id renamed to coin_id, the audit stamp, then the partition column.
 SILVER = StructType(
-    [StructField("coin_id", StringType(), False)]
-    + [f for f in CRYPTO_MARKETS.fields if f.name != "id"]
+    [StructField("coin_id", StringType(), True)]
+    + [StructField(f.name, f.dataType, True) for f in CRYPTO_MARKETS.fields if f.name != "id"]
     + [
-        StructField("update_date", DateType(), False),
-        StructField("last_updated_ts", TimestampType(), False),
+        StructField("last_updated_ts", TimestampType(), True),
+        StructField("update_date", DateType(), True),
     ]
 )
 
@@ -98,10 +105,25 @@ DQ_METRIC = StructType(
     ]
 )
 
+# DQ constraint result row (glue/data_quality_pydeequ.py:91,117-120).
+DQ_CHECK = StructType(
+    [
+        StructField("constraint_name", StringType(), True),
+        StructField("metric", StringType(), True),
+        StructField("value", DoubleType(), True),
+        StructField("constraint_status", StringType(), True),
+    ]
+)
+
+# dim_coins shape (glue/data_aggregate_gold.py:108-112).
+DIM_COINS = StructType(
+    [StructField(c, StringType(), True) for c in ("coin_id", "symbol", "name")]
+)
+
 # dim_date shape (glue/data_aggregate_gold.py:144-164).
 DIM_DATE = StructType(
     [
-        StructField("date", DateType(), False),
+        StructField("date", DateType(), True),
         StructField("year", IntegerType(), True),
         StructField("month", IntegerType(), True),
         StructField("day", IntegerType(), True),

@@ -1,8 +1,11 @@
 """End-to-end medallion ETL: bronze fixtures → silver → DQ gate → gold,
 with DLQ routing, abort-on-failure, and merge idempotence."""
 
+import os
+
 import pytest
 
+from cryptocurrency_data_pipeline_spark import schemas
 from cryptocurrency_data_pipeline_spark.operators.quality import DQGateError
 from cryptocurrency_data_pipeline_spark.plans import etl
 from cryptocurrency_data_pipeline_spark.plans.runner import StageStatus
@@ -68,12 +71,35 @@ def test_full_pipeline(spark, tmp_path):
     assert fact.count() == 60
     assert spark.read.parquet(paths.gold_dim_coins).count() == 60
     assert spark.read.parquet(paths.gold_dim_date).count() == 1
+    # First load publishes the dims by rename: no tmp copy stays behind.
+    assert sorted(os.listdir(tmp_path / "gold")) == ["dim_coins", "dim_date", "fact"]
 
     # Idempotence: re-running the same day must not duplicate gold history.
     results2 = etl.build_etl_pipeline(spark, paths, notifier=events.append).run()
     assert [r.status for r in results2] == [StageStatus.SUCCEEDED] * 3
     assert spark.read.parquet(paths.gold_fact).count() == 60
     assert spark.read.parquet(paths.gold_dim_coins).count() == 60
+    assert spark.read.parquet(paths.gold_dim_date).count() == 1
+    # Swapping over the existing dims leaves no *_tmp, __tmp_* or __old_*
+    # sibling directory either.
+    assert sorted(os.listdir(tmp_path / "gold")) == ["dim_coins", "dim_date", "fact"]
+
+
+def test_declared_read_schemas_match_the_landed_tables(spark, tmp_path):
+    """The stages read silver and the dims with declared schemas (no
+    schema-inference job).  A declared schema that drifts from what the
+    stages write would read NULL columns silently, so pin it to the
+    schema Spark infers from the landed files."""
+    paths = _paths(tmp_path)
+    ingestion.write_bronze([_record(i) for i in range(5)], paths.bronze, run_id="r1")
+    results = etl.build_etl_pipeline(spark, paths).run()
+    assert [r.status for r in results] == [StageStatus.SUCCEEDED] * 3
+    for path, declared in [
+        (paths.silver, schemas.SILVER),
+        (paths.gold_dim_coins, schemas.DIM_COINS),
+        (paths.gold_dim_date, schemas.DIM_DATE),
+    ]:
+        assert spark.read.parquet(path).schema == declared, path
 
 
 def test_dq_gate_aborts_pipeline(spark, tmp_path):

@@ -772,3 +772,58 @@ def test_doc_nearest_ngram_is_inverted_index_equi_join(spark):
     )
     assert "b_sh" in p  # the inverted-index posting key is the join key
     assert "InPandas" not in p and "BatchEvalPython" not in p
+
+
+def test_etl_cycle_job_ceilings(spark, tmp_path):
+    """Spark jobs are a budget: a steady-state ETL cycle (second
+    run over a same-day bronze landing, so every gold dim already exists)
+    launches at most 5 transform, 6 quality and 8 aggregate jobs.  A
+    re-added probe action, schema-inference read or tmp round trip
+    fails here."""
+    import json
+
+    from cryptocurrency_data_pipeline_spark.plans import etl
+    from cryptocurrency_data_pipeline_spark.sources import ingestion
+
+    def record(i, **over):
+        rec = {"id": f"coin-{i}", "symbol": f"c{i}", "name": f"Coin {i}",
+               "current_price": 10.0 + i, "market_cap": 10**9 + i}
+        return {**rec, **over}
+
+    paths = etl.EtlPaths(*(
+        str(tmp_path / n)
+        for n in ("bronze", "silver", "dlq", "metrics", "fact", "dim_coins", "dim_date")
+    ))
+    sc = spark.sparkContext
+    for cycle in range(2):
+        landed = ingestion.write_bronze(
+            [record(i) for i in range(20)] + [record(99, id=None)],
+            paths.bronze,
+            run_id=f"r{cycle}",
+        )
+        with open(landed, "a") as f:
+            f.write(json.dumps(record(98))[:30] + "\n")  # a corrupt line
+        pipeline = etl.build_etl_pipeline(spark, paths)
+
+        def grouped(name, fn, cycle=cycle):
+            def stage(carry):
+                sc.setJobGroup(f"etl-ceiling-{cycle}-{name}", name)
+                try:
+                    return fn(carry)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+
+            return stage
+
+        pipeline.stages = [(n, grouped(n, fn)) for n, fn in pipeline.stages]
+        results = pipeline.run()
+        assert [r.status.value for r in results] == ["SUCCEEDED"] * 3
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = {
+            n: len(sc.statusTracker().getJobIdsForGroup(f"etl-ceiling-{cycle}-{n}"))
+            for n, _ in pipeline.stages
+        }
+    assert jobs["transform"] <= 5, jobs
+    assert jobs["quality"] <= 6, jobs
+    assert jobs["aggregate"] <= 8, jobs

@@ -4,10 +4,25 @@ constraint verification contract, row-level rules + routing."""
 import pytest
 
 from cryptocurrency_data_pipeline_spark.operators import quality
+from cryptocurrency_data_pipeline_spark.schemas import DQ_CHECK, DQ_METRIC
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "coin_id string, price double, cap long")
+
+
+def _plan_leaves(node):
+    children = node.children()
+    if children.size() == 0:
+        return [node]
+    return [leaf for i in range(children.size()) for leaf in _plan_leaves(children.apply(i))]
+
+
+def _leaf_names(df):
+    return [
+        leaf.getClass().getSimpleName()
+        for leaf in _plan_leaves(df._jdf.queryExecution().executedPlan())
+    ]
 
 
 def test_profile_single_pass(spark):
@@ -47,11 +62,54 @@ def test_verify_pass_fail_and_raise(spark):
         quality.Constraint("size >= 1", "Size()", lambda v: v >= 1),
         quality.Constraint("min price > 0", "Minimum(price)", lambda v: v > 0),
     ]
-    res = {r.constraint_name: r.constraint_status for r in
-           quality.verify(spark, m, constraints).collect()}
+    frame = quality.verify(spark, m, constraints)
+    assert frame.schema == DQ_CHECK
+    assert _leaf_names(frame) == ["LocalTableScanExec"]
+    res = {r.constraint_name: r.constraint_status for r in frame.collect()}
     assert res == {"size >= 1": "Success", "min price > 0": "Failure"}
     with pytest.raises(quality.DQGateError, match="min price > 0"):
         quality.verify(spark, m, constraints, raise_on_failure=True)
+
+
+def test_profile_df_round_trips_values_on_a_local_scan(spark):
+    """The metrics frame keeps NaN, NULL and ±inf apart (a pandas round
+    trip would turn NaN into NULL), and it plans as a local scan in the
+    JVM — no pickled RDD, so no Python worker per metrics-sink append."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    metrics = {
+        "Size()": 4.0,
+        "Mean(price)": float("nan"),
+        "StandardDeviation(price)": None,
+        "Minimum(price)": float("-inf"),
+        "Maximum(price)": float("inf"),
+    }
+    df = quality.profile_df(spark, metrics)
+    assert df.schema == DQ_METRIC
+    got = {(r.entity, r.instance, r.name): r.value for r in df.collect()}
+    assert set(got) == {
+        ("Dataset", "*", "Size"),
+        ("Column", "price", "Mean"),
+        ("Column", "price", "StandardDeviation"),
+        ("Column", "price", "Minimum"),
+        ("Column", "price", "Maximum"),
+    }
+    assert got[("Dataset", "*", "Size")] == 4.0
+    assert math.isnan(got[("Column", "price", "Mean")])
+    assert got[("Column", "price", "StandardDeviation")] is None
+    assert got[("Column", "price", "Minimum")] == float("-inf")
+    assert got[("Column", "price", "Maximum")] == float("inf")
+    # The JVM sees the same distinction, not only the Python collect.
+    assert df.where(F.isnan("value")).count() == 1
+    assert df.where(F.col("value").isNull()).count() == 1
+    assert _leaf_names(df) == ["LocalTableScanExec"]
+
+    empty = quality.profile_df(spark, {})
+    assert empty.schema == DQ_METRIC
+    assert empty.columns == ["entity", "instance", "name", "value"]
+    assert empty.collect() == []
 
 
 def test_row_level_rules_and_routing(spark):
